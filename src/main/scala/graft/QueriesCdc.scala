@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{RowKey, Tables}
+import graft.core.{FsSize, RowKey, SessionConf, Tables}
 import graft.changelog.Changelog
 import graft.encode.{CommonFormatJson, SqlDml}
 import graft.filters.RowFilter
@@ -46,11 +46,8 @@ object QueriesCdc {
     * stores paying per-batch open/commit; a 100 TB deployment sets this
     * to its executor width at FIRST launch of the job, same knob.
     */
-  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", old)
-  }
+  private[graft] def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    SessionConf.withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Run a stateful stream on the RocksDB state store provider — the
     * production backend for large state (changelog-file commits instead
@@ -68,32 +65,26 @@ object QueriesCdc {
     * 100 TB state the trade only widens toward RocksDB: snapshot-file
     * cost scales with state size, changelog commits with the delta.
     */
-  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
-    val set = Seq(
+  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T =
+    SessionConf.withConf(s,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
       "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "512",
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
       // r20: commit = changelog delta upload instead of a full snapshot
-      // zip per store per batch. The r20 micro-batch phase profile
-      // (tools.R20StreamProf, OPTIMIZATION_r20.md) attributed the bulk
-      // of addBatch's non-compute cost to state commits — summed across
-      // instances q_stream_neardup paid 29.8 s of snapshot commits in
-      // one replay, 4.9 s with changelog commits. Snapshot construction
+      // zip per store per batch. The r20 micro-batch phase profile (per-
+      // batch StreamingQueryProgress durations and state-operator commit
+      // times) attributed the bulk of addBatch's non-compute cost to
+      // state commits — summed across instances q_stream_neardup paid
+      // 29.8 s of snapshot commits in one replay, 4.9 s with changelog
+      // commits. Snapshot construction
       // moves to background maintenance, which a bounded replay never
       // pays. This is the production setting for commit-latency-bound
       // streams; checkpoint format changes, but every checkpoint here is
       // per-run scratch (Tmp.scratchDir) so nothing persisted crosses a
       // version boundary.
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val old = set.map { case (k, _) => k -> s.conf.getOption(k) }
-    set.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
 
   /** Fresh checkpoint dir for one bounded replay (the replay must start
     * from scratch each run), deleted once the stream terminates — bench
@@ -573,14 +564,9 @@ object QueriesCdc {
       // rows with seq < ddlSeq were governed by the pre-ALTER schema.
       var ddlSeq = Long.MaxValue
       var preCols = v1.columns.length
-      val prof = sys.props.contains("graft.ddl.prof")
-      val tStart = System.nanoTime()
-      def mark(what: String): Unit = if (prof)
-        System.err.println(f"[ddlprof] $what%-28s ${(System.nanoTime() - tStart) / 1e9}%.3f")
       val loop = new SchemaRestartLoop(repull =
         () => throw new IllegalStateException("ADD COLUMN applies locally; no repull"))
       val (_, restarts) = loop.run(v1, (schema, signal) => {
-        mark(s"launch cols=${schema.columns.length}")
         val struct = Schema.toStructType(schema)
         val launchCols = schema.columns.length
         def write(b: DataFrame, batchId: Long): Unit =
@@ -625,7 +611,6 @@ object QueriesCdc {
             // batch pays the extra rewrite and the wall time is a wash
             // here); in production DDL touches 1 batch in thousands and
             // every other batch keeps the single-job shape.
-            mark(s"batch $batchId begin")
             val obs = new org.apache.spark.sql.Observation(
               s"graft-ddl-$batchId-${System.nanoTime()}")
             val observed = batch0.observe(obs,
@@ -652,17 +637,14 @@ object QueriesCdc {
                 case SchemaFlow.NotSchemaRelated => ()
               }
             }
-            mark(s"batch $batchId end")
           }.start()
       })
-      mark("loop done")
       require(restarts == 1, s"expected exactly one schema restart, got $restarts")
       // explicit per-batch dirs, not a glob: FileStreamSink.hasMetadata
       // stats the literal glob string first and logs a noisy (harmless)
       // FileNotFoundException stack on every run
       val batchDirs = new java.io.File(dataDir).listFiles()
         .filter(_.getName.startsWith("batch=")).map(_.getPath).sorted
-      mark("read back")
       // explicit schema: every batch dir writes these 8 columns, so the
       // footer-merge inference pass (a listing + footer-read job over all
       // batch dirs before the real scan) is pure overhead
@@ -1276,8 +1258,8 @@ object QueriesCdc {
     * opens FOUR stores per state partition (left/right x
     * keyToNumValues/keyWithIndexToValue), so width is a real trade: at
     * fixture scale 4 beat 8 (16 store open/commit cycles per batch
-    * already; 3.25 -> 2.97 s measured r13), but the r14 sf10 probe
-    * (tools.StreamProf) showed the flip side — 10M-row batches through 4
+    * already; 3.25 -> 2.97 s measured r13), but an r14 sf10 per-batch
+    * profile showed the flip side — 10M-row batches through 4
     * partitions serialize the probe side: 170 s of batch time at width 4
     * vs 52 s at width 32, while width-matched scaling is SUB-linear per
     * decade (9.4 s -> 52 s for 10x). So size from the staged source like
@@ -1286,13 +1268,8 @@ object QueriesCdc {
     * width). Result rows are partitioning-invariant — the sf1 hash gate
     * proves it.
     */
-  private def joinStateWidth(src: String): Int = {
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(size).sum
-      else f.length()
-    val mib = size(new java.io.File(src)) >> 20
-    math.max(4, math.min(32, mib.toInt))
-  }
+  private[graft] def joinStateWidth(srcBytes: Long): Int =
+    math.max(4L, math.min(32L, srcBytes >> 20)).toInt
 
   def streamJoin(s: SparkSession, dir: String): DataFrame = {
     val src = streamJoinSource(s, dir)
@@ -1309,16 +1286,12 @@ object QueriesCdc {
     // with it off for an inner join (oracle + stream≡batch spec gate
     // this); an OUTER stream-stream join would need it (null-extended
     // rows emit at eviction) and must not copy this setting.
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try withStatePartitions(s, joinStateWidth(src)) {
-      withRocksDbState(s) {
-        drainToParquet(s, joined, "sjoin_out", dir, "graft-sjoin-ckpt")
+    SessionConf.withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      withStatePartitions(s, joinStateWidth(FsSize.bytes(src))) {
+        withRocksDbState(s) {
+          drainToParquet(s, joined, "sjoin_out", dir, "graft-sjoin-ckpt")
+        }
       }
-    } finally old match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

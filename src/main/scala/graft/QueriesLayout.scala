@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SessionConf, Tables}
 
 /** Physical-layout operators: the data-ORGANIZATION layer that decides
   * whether a 100 TB table is scannable — bucketed co-located joins (the
@@ -186,10 +186,9 @@ object QueriesLayout {
     val sketch = {
       val items = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
       val bits = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-      val (prevI, prevB) = (s.conf.get(items), s.conf.get(bits))
-      s.conf.set(items, math.max(prevI.toLong, evalCount).toString)
-      s.conf.set(bits, math.max(prevB.toLong, numBits).toString)
-      try {
+      SessionConf.withConf(s,
+        items -> math.max(s.conf.get(items).toLong, evalCount).toString,
+        bits -> math.max(s.conf.get(bits).toLong, numBits).toString) {
         val registry = s.sessionState.functionRegistry
         registry.createOrReplaceTempFunction("graft_bloom_agg",
           exprs => new BloomFilterAggregate(exprs.head,
@@ -200,7 +199,7 @@ object QueriesLayout {
         evalGrams
           .agg(call_function("graft_bloom_agg", xxhash64(col("gram"))).as("bf"))
           .head.getAs[Array[Byte]](0)
-      } finally { s.conf.set(items, prevI); s.conf.set(bits, prevB) }
+      }
     }
     // BROADCAST→SHUFFLE SWITCH for the exact verify: the survivors of the
     // bloom pre-prune are hits + ~1% false positives — small — but the
@@ -210,8 +209,8 @@ object QueriesLayout {
     // gram above it — the pruned stream's shuffle is survivor-sized, not
     // corpus-sized); this call site has the EXACT eval count in hand
     // (paid for sketch sizing), so no estimate is involved. Results are
-    // bit-identical either way — DecontScaleProbe proves both paths at
-    // 258M grams.
+    // bit-identical either way — TrainingSpec's forced SHUFFLE_HASH test
+    // pins it.
     val verifySide = QueriesTraining.evalVerifySide(evalGrams, evalCount)
     grams.filter(col("doc_id") % 17 =!= 0)
       // sketch pre-prune (false positives possible), codegen'd bit probe

@@ -36,22 +36,20 @@ object QueriesTraining {
     * pass only dominates once the corpus dwarfs the constant — the same
     * size-from-the-source decision as [[evalVerifySide]]'s
     * broadcast→shuffle switch and streamJoin's state width. Threshold
-    * overridable for probes via -Dgraft.pin.corpusMinBytes (default
-    * 2 MiB of documents parquet ≈ sf0.3; at sf1 the pin wins — the sf1
-    * A/B in OPTIMIZATION_r20.md carries the crossover numbers).
+    * [[PinCorpusMinBytes]]: 2 MiB of documents parquet ≈ sf0.3, between
+    * the sf0.1 fixture where the pin loses and sf1 where an r20 A/B
+    * measured it winning.
     */
-  private def pinModelIfCorpusLarge(df: DataFrame, dir: String): DataFrame = {
-    val minBytes = sys.props.get("graft.pin.corpusMinBytes")
-      .map(_.toLong).getOrElse(2L << 20)
-    def size(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(size).sum
-      else f.length()
-    val corpusBytes = size(new java.io.File(s"$dir/documents.parquet"))
-    if (corpusBytes >= minBytes)
+  private[graft] val PinCorpusMinBytes: Long = 2L << 20
+
+  private[graft] def pinsModel(corpusBytes: Long): Boolean =
+    corpusBytes >= PinCorpusMinBytes
+
+  private def pinModelIfCorpusLarge(df: DataFrame, dir: String): DataFrame =
+    if (pinsModel(graft.core.FsSize.bytes(s"$dir/documents.parquet")))
       graft.core.CacheRegistry.register(
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else df
-  }
 
   /** Word n-grams from a token array, built narrowly (index arithmetic
     * over the array, no shuffle). Empty array below n tokens.
@@ -71,15 +69,17 @@ object QueriesTraining {
       .otherwise(array().cast("array<string>"))
 
   /** Physical-plan choice for an eval-gram verify join — NEVER semantics
-    * (both sides produce bit-identical output; DecontScaleProbe proves it
-    * at 258M grams): broadcast the eval side below the cap (default 50M
-    * grams ≈ a few GB of hash relation, under Spark's 8 GB ceiling),
+    * (both sides produce bit-identical output; TrainingSpec's forced
+    * SHUFFLE_HASH test pins it): broadcast the eval side below the cap
+    * (default 50M grams ≈ a few GB of hash relation, under Spark's 8 GB
+    * ceiling),
     * SHUFFLE_HASH above it. `estGrams` may be an exact count (bloomPrune
     * already pays one for sketch sizing) or the memoized sampled estimate
     * from [[estEvalGrams]], so callers without a count in hand pay two
     * bounded jobs ONCE per (dataset, predicate), not a gram enumeration,
-    * to pick a join strategy. Overridable for scale probes via
-    * -Dgraft.decontaminate.broadcastMaxGrams.
+    * to pick a join strategy. Overridable via
+    * -Dgraft.decontaminate.broadcastMaxGrams (TrainingSpec sets it to 1 to
+    * force the SHUFFLE_HASH path).
     */
   private[graft] def evalVerifySide(evalGrams: DataFrame, estGrams: Long): DataFrame = {
     val cap = sys.props.get("graft.decontaminate.broadcastMaxGrams")
@@ -105,9 +105,9 @@ object QueriesTraining {
     * doc count, and a LocalLimit-capped 2048-row token-count sample (the
     * limit stops the text scan after a few partitions — never a full-text
     * corpus read). The margin keeps the estimate deliberately HIGH: an
-    * over-estimate flips to SHUFFLE_HASH early (proven bit-identical and
-    * faster at 258M grams — DecontScaleProbe); an under-estimate risks the
-    * broadcast ceiling.
+    * over-estimate flips to SHUFFLE_HASH early (measured faster at 258M
+    * grams; TrainingSpec's forced SHUFFLE_HASH test pins the identical
+    * output); an under-estimate risks the broadcast ceiling.
     */
   private val evalGramEstCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -450,9 +450,10 @@ object QueriesTraining {
     // boilerplate), because AQE cannot split window partitions but the
     // hot group sort is O(n log n) in one task only past ~10M identical
     // windows. If a target corpus carries a single w-token window at
-    // that multiplicity, switch to the probe's salted form (partial
-    // min/max per (h, salt), combine per h, join back onto pinned
-    // windows — proven row-identical on the probe corpus).
+    // that multiplicity, switch to the salted form (partial min/max per
+    // (h, salt), combine per h, join back onto pinned windows). The r20
+    // probe compared the two forms by a 32-bit hash of their rows only,
+    // so prove row identity exactly (except() both ways) when switching.
     val wH = Window.partitionBy(col("h"))
     val hits = windows
       .withColumn("_d0", min(col("doc_id")).over(wH))
@@ -1127,6 +1128,14 @@ object QueriesTraining {
     * identical merges as literal replace chains. The driver holds one
     * (pair, count) row per round, nothing else.
     */
+  /** Drop the blocks of an eager `localCheckpoint()` result. The
+    * DataFrame's own `unpersist` only touches the cache manager; the
+    * checkpoint's blocks belong to the RDD under its LogicalRDD leaf. */
+  private def releaseCheckpoint(ckpt: DataFrame): Unit =
+    ckpt.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.foreach(_.unpersist(blocking = false))
+
   private def bpeTrain(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val d = docs(s, dir)
     val tok = d.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -1145,6 +1154,7 @@ object QueriesTraining {
         "contains one of | $ ' (reserved as symbol delimiter / end-of-word " +
         "marker / SQL quote)")
     var vocab = base
+    var resident = base // the one checkpoint copy kept in the block manager
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var done = false
     while (!done && merges.size < BpeMerges) {
@@ -1167,15 +1177,21 @@ object QueriesTraining {
         // r20: re-materialize the vocab every few merges. Round r's plan
         // otherwise stacks r replace-pairs over the checkpointed base, so
         // every round re-analyzes and re-compiles a linearly growing
-        // expression chain — the r20 trainer profile (tools.R20TrainerProf)
-        // measured the per-round executor jobs at ~0.1 s (1 near-empty
-        // task) while wall-minus-jobs driver time was ~0.5 s/round and
-        // growing. The checkpoint is one ~50 ms job over the
-        // vocabulary-bounded table and resets the plan to a leaf — total
-        // driver work drops from O(rounds²) to O(rounds). Values are
-        // unchanged (a checkpoint is a materialization barrier, not a
-        // transformation); the BPE oracle + specs pin the trained merges.
-        if (merges.size % 4 == 0) vocab = vocab.localCheckpoint()
+        // expression chain — an r20 per-round trainer profile measured the
+        // per-round executor jobs at ~0.1 s (1 near-empty task) while
+        // wall-minus-jobs driver time was ~0.5 s/round and growing. The
+        // checkpoint is one ~50 ms job over the vocabulary-bounded table
+        // and resets the plan to a leaf — total driver work drops from
+        // O(rounds²) to O(rounds). Values are unchanged (a checkpoint is a
+        // materialization barrier, not a transformation); the BPE oracle +
+        // specs pin the trained merges. The eager checkpoint has
+        // materialized with its lineage cut before the previous copy is
+        // released, so only the latest copy stays resident.
+        if (merges.size % 4 == 0) {
+          vocab = vocab.localCheckpoint()
+          releaseCheckpoint(resident)
+          resident = vocab
+        }
       }
     }
     BpeOracle.stash(dir, merges.toList)

@@ -387,7 +387,7 @@ object Dedup {
       // ordering, so each round's merge join skips re-sorting the edge
       // side (the labels side, node-count-sized, still sorts). The join
       // itself is already exchange-free — cached hash(src) edges against
-      // hash(src)-partitioned label aggs (probe: tools.CcPlanProbe, one
+      // hash(src)-partitioned label aggs (the executed plan shows one
       // live exchange per round = the doc_id aggregation).
       .sortWithinPartitions(col("src"))
       .persist()

@@ -190,6 +190,17 @@ class CorpusOpsSpec extends SparkSuite {
     assert(d1.getLong(4) == 2400L)
   }
 
+  test("bpeTokenize: training leaves one vocab checkpoint resident") {
+    // the vocab is checkpointed once before training and every 4 merge
+    // rounds (3 copies here); each new copy releases the previous one
+    val sc = spark.sparkContext
+    def checkpointed = sc.getPersistentRDDs.collect {
+      case (id, rdd) if rdd.isCheckpointed => id }.toSet
+    val before = checkpointed
+    QueriesTraining.bpeTokenize(spark, sf0001)
+    assert((checkpointed -- before).size == 1)
+  }
+
   test("tokenizeApply: id streams match the hand-run encode; n_tok agrees with bpeTokenize") {
     // Same fixture as the bpeTokenize test: merges 'an' then 'ana$', stop.
     // Final vocab: ana = |ana$|, banana = |b|an|ana$|.
